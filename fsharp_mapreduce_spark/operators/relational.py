@@ -2302,6 +2302,29 @@ def q69_exact_percentile_scalable(spark: SparkSession, sf_dir: str) -> DataFrame
 Q70_P = 0.5
 
 
+def _round_candidates(prev_cand: DataFrame, bounds: DataFrame) -> DataFrame:
+    """The (g, v) rows of ``prev_cand`` inside their group's [lo, hi] in
+    ``bounds``, checkpointed so each bisection round starts a fresh
+    lineage. Two things would otherwise grow without bound over the
+    rounds: the plan (a persisted DataFrame keeps its lineage, so every
+    round embeds all earlier ones), and Catalyst's size estimate — an
+    inner join is sized as the PRODUCT of its inputs and a checkpoint
+    inherits its plan's estimate, so chaining candidates through inner
+    joins compounds it every round (24 rounds spent minutes multiplying
+    BigInts, then OOM'd the JVM). A left-semi join is sized as its left
+    side, so the estimate stays flat."""
+    c, b = prev_cand.alias("c"), bounds.alias("b")
+    return (
+        c.join(
+            b,
+            (F.col("c.g") == F.col("b.g"))
+            & F.col("c.v").between(F.col("b.lo"), F.col("b.hi")),
+            "left_semi",
+        )
+        .localCheckpoint()
+    )
+
+
 def grouped_exact_percentile(
     df: DataFrame,
     group_col: str,
@@ -2325,20 +2348,20 @@ def grouped_exact_percentile(
     [mn, mx] are member values; (v \u2212 lo)/w is monotone in v, and mn,
     mx floor to the same bucket index, so every group row in
     [mn, mx] floors to that index too — BETWEEN mn AND mx selects
-    exactly the bucket's rows. The bucket INDEX is always computed by
-    the same JVM expression on both the histogram and the min/max
-    pass (bounds ride the state join), so nothing off-plan ever
-    decides membership; the bucket width (hi\u2212lo)/buckets is likewise
-    a JVM double expression on both passes.
+    exactly the bucket's rows. The bucket INDEX and its [mn, mx] come
+    from the same JVM aggregation (bounds ride the state join), so
+    nothing off-plan ever decides membership; the bucket width
+    (hi\u2212lo)/buckets is likewise a JVM double expression.
 
-    Round chaining (r12): each round's candidate set is rebuilt from
-    the PREVIOUS round's persisted candidates, not the full base —
+    Round chaining: each round's candidate set is rebuilt from the
+    PREVIOUS round's checkpointed candidates, not the full base —
     sound because a group active at round r+1 has bounds inside its
     round-r bucket, so its candidate rows are a subset of the round-r
-    set. One pass per round over a geometrically shrinking cached set
-    (MEMORY_AND_DISK — the round-1 set is the active-corpus slice and
-    may spill at scale), and the final assembly reads the caches
-    instead of re-executing every round's base-join subtree.
+    set. One pass per round over a geometrically shrinking set
+    (localCheckpoint stores MEMORY_AND_DISK — the round-1 set is the
+    active-corpus slice and may spill at scale), the final assembly
+    reads the checkpoints instead of re-executing every round's
+    base-join subtree, and each round's plan stays constant-size.
 
     Scale contract: the per-round exchange is (group, bucket)-keyed
     with map-side combine — state \u2264 groups \u00d7 {1024} cells regardless
@@ -2411,17 +2434,12 @@ def grouped_exact_percentile(
             f"buckets/passes for this distribution"
         )
 
-    # Candidate-set chaining (r12, VERDICT r11 #3): each round's
-    # candidate rows are a SUBSET of the previous round's (a group
-    # still active at round r+1 narrowed its bounds to the picked
-    # bucket's [mn, mx] ⊆ its round-r [lo, hi], and groups that left
-    # are dropped by the state join), so round r+1 filters the CACHED
-    # round-r candidate set instead of re-scanning the full base.
-    # Before this, every round re-executed the base→join→between
-    # subtree ~3× (counts probe, state pass, and AGAIN per round at
-    # the final sink, where the done-part subtrees re-materialized) —
-    # the sink now reads the per-round caches, and each round's single
-    # rebuild pass runs over a geometrically shrinking set.
+    # Candidate-set chaining: each round's candidate rows are a SUBSET
+    # of the previous round's (a group still active at round r+1
+    # narrowed its bounds to the picked bucket's [mn, mx] ⊆ its round-r
+    # [lo, hi], and groups that left are dropped by the state join), so
+    # round r+1 filters the checkpointed round-r candidate set instead
+    # of re-scanning the full base.
     prev_cand = base
     for _ in range(Q69_MAX_PASSES):
         done_parts.append(
@@ -2442,20 +2460,15 @@ def grouped_exact_percentile(
                 | (F.col("w") == F.lit(float("inf"))),
             )
         )
-        scand = scoped_persist(
-            prev_cand.join(active, "g").where(
-                F.col("v").between(F.col("lo"), F.col("hi"))
-            )
-        )
-        prev_cand = scand.select("g", "v")
-        # r11 optimization round note: a fused single-probe variant
-        # (counts keyed on (g, uf), one agg answering emptiness + the
-        # underflow pre-check) was tried and REVERTED with evidence —
-        # it forces full eager materialization inside the driver loop
-        # where isEmpty/limit-collect short-circuit, and measured q70
-        # 4.0 s → 5.6 s at sf0.1. The lazy probes stay.
+        prev_cand = _round_candidates(prev_cand, active)
+        scand = prev_cand.join(active, "g")
+        # A fused single-probe variant (counts keyed on (g, uf), one agg
+        # answering emptiness + the underflow pre-check) measured q70
+        # 4.0 s → 5.6 s at sf0.1: it forces full eager materialization
+        # inside the driver loop where isEmpty/limit-collect
+        # short-circuit. The lazy probes stay.
         counts = scoped_persist(
-            scand.groupBy("g").agg(F.count(F.lit(1)).alias("cnt"))
+            prev_cand.groupBy("g").agg(F.count(F.lit(1)).alias("cnt"))
         )
         if counts.isEmpty():
             break
@@ -2470,8 +2483,10 @@ def grouped_exact_percentile(
         done_parts.append(
             _exact_part(scand, counts.where(F.col("cnt") <= fallback))
         )
-        # bisect the rest: per-group histogram, window cumulative walk,
-        # bucket min/max re-anchor — all keyed, nothing driver-side
+        # bisect the rest: one keyed (group, bucket) histogram carrying
+        # each bucket's min/max, a window cumulative walk picks the
+        # bucket, and its [mn, mx] re-anchor the group — nothing
+        # driver-side, and no second pass over the candidates
         bis = scand.where(~F.col("uf")).join(
             counts.where(F.col("cnt") > fallback).select("g"), "g", "left_semi"
         )
@@ -2480,32 +2495,25 @@ def grouped_exact_percentile(
             F.lit(buckets - 1),
         )
         hist = bis.groupBy("g", "k", b_expr.alias("b")).agg(
-            F.count(F.lit(1)).alias("cnt")
+            F.count(F.lit(1)).alias("cnt"),
+            F.min("v").alias("mn"),
+            F.max("v").alias("mx"),
         )
-        pick = (
+        # localCheckpoint (eager), not persist: the next round's active,
+        # scand, counts and bis all re-reference state, so without
+        # truncation the logical plan grows EXPONENTIALLY in rounds.
+        # Same pattern as the CC loop (functions/dedup.py).
+        state = (
             hist.withColumn("cb", F.sum("cnt").over(cum_w) - F.col("cnt"))
             .where(
                 (F.col("cb") < F.col("k"))
                 & (F.col("k") <= F.col("cb") + F.col("cnt"))
             )
-            .select("g", F.col("b").alias("pick"), (F.col("k") - F.col("cb")).alias("nk"))
-        )
-        # localCheckpoint (eager), not persist: each round's state plan
-        # embeds the previous round's several times over (active, scand,
-        # counts, bis all re-reference it), so without truncation the
-        # logical plan grows EXPONENTIALLY in rounds — a 24-round
-        # nonconvergence run OOM'd the JVM analyzing it. Same pattern as
-        # the CC loop (functions/dedup.py).
-        state = (
-            bis.join(pick, "g")
-            .where(b_expr == F.col("pick"))
-            .groupBy("g", "nk")
-            .agg(F.min("v").alias("mn"), F.max("v").alias("mx"))
             .select(
                 "g",
                 F.col("mn").alias("lo"),
                 F.col("mx").alias("hi"),
-                F.col("nk").alias("k"),
+                (F.col("k") - F.col("cb")).alias("k"),
             )
             .localCheckpoint()
         )
@@ -2522,17 +2530,15 @@ def grouped_exact_percentile(
         )
         rem = state.where(F.col("lo") != F.col("hi"))
         # same chaining: rem's bounds are within the last pass's
-        # candidate set, so filter the cache, not the base
-        scand = prev_cand.join(rem, "g").where(
-            F.col("v").between(F.col("lo"), F.col("hi"))
-        )
+        # candidate set, so filter the checkpoint, not the base
+        cand = _round_candidates(prev_cand, rem)
         counts = scoped_persist(
-            scand.groupBy("g").agg(F.count(F.lit(1)).alias("cnt"))
+            cand.groupBy("g").agg(F.count(F.lit(1)).alias("cnt"))
         )
         bad = counts.where(F.col("cnt") > fallback).limit(6).collect()
         if bad:
             _fail(bad, f"no convergence after {Q69_MAX_PASSES} passes")
-        done_parts.append(_exact_part(scand, counts))
+        done_parts.append(_exact_part(cand.join(rem, "g"), counts))
     done = _reduce(DataFrame.unionByName, done_parts)
     return (
         init.join(done, "g")

@@ -90,7 +90,7 @@ def scoped_persist(df: DataFrame) -> DataFrame:
     executing the first silently unpersists the first one's staging —
     still correct (plans recompute), but the staging recomputes once
     per downstream consumer. Every registry consumer (driver gate,
-    verify_probe, the differential suite, bench) follows this
+    verify_probe, the differential suite, perfbench) follows this
     sequential contract."""
     with _SCOPED_CACHES_LOCK:
         _SCOPED_CACHES.append(df.persist())
@@ -146,92 +146,23 @@ def release_scoped_caches() -> None:
 # (TESTDATA.md; observed r1/r2) — data-derived oracles target it.
 GATE_SF_DIR = os.environ.get("SPARK_GRAFT_GATE_SF_DIR", "/root/testdata/sf0.01")
 
-# Driver-gate exposure policy (VERDICT r2, "Next round" #1): the
-# driver's correctness gate checks exactly the FIRST 50 names of
-# ``__spark_entry__.queries()`` in sort order, and r2 proved that a
-# registry larger than 50 silently pushes everything sorting after the
-# window (all t*/st* LLM-pipeline + streaming ops) out of verification.
-# Policy: keep the EXPOSED registry at ≤50 entries — every dedup /
-# text / sampling / similarity / multimodal / streaming operator plus
-# one representative per relational operator family. The names below
-# are near-duplicate family members of an exposed representative; they
-# stay fully registered, locally oracle-verified every run by
-# tests/test_oracle_differential.py (which iterates ALL of QUERIES),
-# and runnable by users — they just don't occupy gate slots.
-# Family → exposed representative:
-#   q04/q05/q06/q07/q33 (join variants)        → q03 + q08
-#   q09/q10/q11/q12/q28/q29/q30/q32/q37 (agg/Expand/sketch) → q01
-#   q13/q14/q15/q16 (window variants)          → q31 + q39
-#   q18/q20/q21 (set ops)                      → q19
-#   q22/q23/q24/q25/q26/q34/q35/q36/q38 (scalar/sequence fns) → q27 + q41
-#
-# ROTATION (round 5, VERDICT r4 "Next round" #3): the round-4
-# additions (t27/t28/t29, st12, q41, s10) rotate INTO the gate window,
-# plus s11 (the materialized-IVF probe the judge asked to promote,
-# VERDICT r4 #5). Folding out to make room: their multi-round-driver-
-# green family siblings (t13→t27, t15→t29, t18→t28, st06→st12,
-# s03→s10, s04→s11, q26 to the q-family fold). Every folded query
-# keeps its oracle and is value-hash-verified against DuckDB on every
-# pytest run by test_oracle_differential.
-#
-# Non-q entries folded out MUST name their exposed representative in
-# PYTEST_ONLY_FAMILY below (pinned by tests/test_registry_exposure.py)
-# — the brief grades pipeline namespaces as first-class, so a t/s/st/m
-# operator only stays off the gate when a same-namespace sibling
-# covering the same operator family holds a slot.
+# Driver-gate exposure policy: the external driver's correctness gate
+# checks only the first GATE_WINDOW names of ``__spark_entry__.queries()``
+# in sort order, so the EXPOSED registry stays within that window. Every
+# registered query stays runnable and oracle-checked on every pytest run
+# (tests/test_oracle_differential.py iterates ALL of QUERIES); the names
+# below are just kept off the gate. A non-q query may be folded out only
+# by naming, in PYTEST_ONLY_FAMILY, an EXPOSED same-namespace sibling that
+# covers its operator family; q-family near-duplicates fold freely
+# (tests/test_registry_exposure.py pins both rules).
 PYTEST_ONLY_FAMILY: dict[str, str] = {
-    # ROTATION #8 (r11, VERDICT r10 "Next round" #1): the ten
-    # rotate-ins are the judge's never-driver-checked priority list —
-    # the r10 births t47/t48/m15/s24 plus s12, s15, s16, s17, s18,
-    # t36 (each probed green at sf0.01 in a vanilla session before
-    # exposure via scripts/verify_probe.py, the standing discipline;
-    # the r10 judge independently probed t47/t48/m15/s24 green too).
-    # Folding out to make room, every family still represented:
-    # t10 (driver-green r6-r10) folds to t47 — the same
-    # embedding-dedup family, with t09 re-pointed alongside;
     "t10_embedding_neardup_lsh": "t47_semantic_dedup",
-    # t44 (driver-green r8-r10) folds to t48 — the same duplicated-
-    # text-block family (block digests vs exact substrings), with
-    # t01/t26 re-pointed;
     "t44_boilerplate_blocks": "t48_duplicate_spans",
-    # s19 (driver-green r8-r10) folds to s18 — the binary end of the
-    # SAME quantization ladder (sign-bit signatures vs PQ codes, both
-    # candidate → exact-re-rank), with s01/s04/s08/s11/s14 re-pointed;
     "s19_knn_ivf_pq": "s18_knn_binary_hamming",
-    # s20 (driver-green r8-r10) folds to s22 — the rebalance stage of
-    # the same IVF index lifecycle (s13 append stays exposed too);
     "s20_ivf_index_delete": "s22_ivf_index_rebalance",
-    # st17 (driver-green r7-r10) folds to st20 — the same watermark-
-    # closed stream-stream outer-join machinery (full vs right outer;
-    # st21 anti + st19 semi keep the matrix driver-checked), with
-    # st05/st13 re-pointed;
     "st17_stream_full_outer_join": "st20_stream_right_outer_join",
-    # t42 (driver-green r8-r10) folds to t34 — the same broadcast-
-    # gram-hash membership probe family (t25/t37 already ride t34);
     "t42_source_overlap": "t34_fuzzy_match",
-    # m06 (driver-green r9-r10) folds to the m10 capstone that decodes
-    # the same BMP payloads through the same Arrow batch shape
-    # (m07/m08/m09 keep three single-codec rows exposed);
     "m06_bmp_decode_stats": "m10_codec_dispatch",
-    # ...plus three q-family folds (q62/q65/q69) in PYTEST_ONLY below.
-    # ROTATION #7 (r10, VERDICT r9 "Next round" #1): the ten rotate-ins
-    # are the judge's never-driver-checked priority list — the r9
-    # additions m14/s23/t46 plus s21, st14, m07, m08, m09, t31, t35
-    # (each probed green at sf0.01 in a vanilla session before
-    # exposure, the standing discipline). Folding out to make room:
-    # multi-round-driver-green members whose operator families keep
-    # exposed representatives — m11/m12 (r8-r9 green) ride the m10
-    # capstone that decodes the same AVI/WAV containers; s02 (green
-    # r2-r9) folds to s21, the strictly-more-general multi-probe of
-    # the SAME LSH pipeline (and stays driver-exercised through the
-    # exposed s21/s23/st14, all of which run its probe machinery);
-    # s10 (green r5-r9) folds to s09, the same broadcast-join +
-    # array-math aggregate shape; t22 (green r4-r9) folds to t34, the
-    # same capped-postings candidate join with in-band verification;
-    # t28 (green r5-r9) folds to t20, the same map-only single-scan
-    # per-document text pass; t30 (green r6-r9) folds to t46, whose
-    # audit runs the full t03 banding pipeline every check; plus three
-    # q-family folds (q17/q64/q68) per the declared exposure policy.
     "m11_scene_cut_detection": "m10_codec_dispatch",
     "m12_audio_silence_segmentation": "m10_codec_dispatch",
     "s02_knn_lsh": "s21_knn_lsh_multiprobe",
@@ -239,388 +170,75 @@ PYTEST_ONLY_FAMILY: dict[str, str] = {
     "t22_winnow_containment_pairs": "t34_fuzzy_match",
     "t28_preprocess_funnel": "t20_repetition_filter",
     "t30_incremental_dedup": "t46_lsh_recall_audit",
-    # ROTATION #6 (r9, VERDICT r8 "Next round" #3): rotate-ins are the
-    # judge's priority list of never-driver-checked queries — s22 + t45
-    # (the r8 additions), st18/st19 (the last streaming cells), t33
-    # (leakage-safe split), s13 (the one unchecked lifecycle stage),
-    # q61/q63/q65, m06 (codec single). Folding out to make room:
-    # multi-round-driver-green family members whose operator families
-    # keep exposed representatives.
-    # corpus-statistics family slot handoff: t45 (Heaps'-law audit,
-    # rotate-in) takes the slot; t19 (TF-IDF, driver-green r1-r8)
-    # folds to it with the whole chain re-pointed above
     "t19_tfidf_top_terms": "t45_vocab_growth",
-    # cluster family handoff: t33 (leakage-safe split, rotate-in)
-    # takes the slot; t23 (star contraction, driver-green r3-r8)
-    # folds — t33 consumes exactly the cluster labels t23/t12 emit
     "t23_dedup_clusters_star": "t33_leakage_safe_split",
-    # arbitrary-stateful family handoff: st18 (decayed activity,
-    # rotate-in) takes the slot; st04 (running max, driver-green
-    # r1-r8) folds — same applyInPandasWithState keyed contract
     "st04_stream_stateful_running_max": "st18_stream_decayed_activity",
-    # banded-fingerprint candidate family: t22 (winnowing containment,
-    # gate-green r5-r8) keeps the slot; t11 (simhash banded pairs,
-    # driver-green r2-r8) folds — same band-bucket candidate join with
-    # in-band verification
     "t11_simhash_neardup_pairs": "t34_fuzzy_match",
-    # LSH-probe family: s02 (driver-green r1-r8, re-verified this
-    # round with the density-adaptive k) keeps the slot; s05 (range
-    # search, driver-green r1-r8) folds — the same broadcast-probe
-    # scoring pipeline with a threshold cut instead of top-k
     "s05_range_search": "s21_knn_lsh_multiprobe",
-    # map-only per-doc text-scoring family: t20 (repetition rules)
-    # keeps the slot; t05 (language ID, driver-green r1-r8) folds —
-    # same single-scan expression-only per-document classification
     "t05_language_id": "t20_repetition_filter",
-    # BPE family: t40 (train) keeps the slot; t41 (encode,
-    # driver-green r7-r8) folds — the encoder replays t40's merge
-    # table, so the train row transitively covers it
     "t41_bpe_encode": "t40_bpe_merges",
-    # Arrow-decode family: the m10 capstone keeps the slot; m05
-    # (visual kNN, driver-green r1-r8) and m13 (transcode,
-    # driver-green r7-r8) fold — m06 (rotate-in) plus m10/m11/m12
-    # keep four decode rows exposed
     "m05_visual_knn": "m10_codec_dispatch",
     "m13_transcode_to_png": "m10_codec_dispatch",
-    # ROTATION #5 (r8, VERDICT r7 "Next round" #1): the 10 rotate-ins
-    # are the judge's never-driver-checked priority list — st20/st21
-    # (join-matrix cells), t44, q69/q70, s20, q62, m11/m12, t42.
-    # Folding out to make room: multi-round-driver-green family
-    # members whose operator families keep exposed representatives —
-    # q08/q39/q59/q60 (q-family folds), st03→st16, st13→st17,
-    # t01→t44, t27→t29, m01→m10, s14→s19 (chains re-pointed below).
-    #
-    # stream-stream join family: st17 (full outer, driver-green r7)
-    # holds the slot alongside the r8 rotate-ins st20 (right outer)
-    # and st21 (anti); st13 (watermark-closed LEFT OUTER,
-    # driver-green r6–r7) folds to the full-outer capstone
     "st13_stream_left_outer_join": "st20_stream_right_outer_join",
-    # streaming-aggregation family: st16 (drift audit — the
-    # micro-batch aggregate machinery) represents; st03 (session
-    # windows — the same watermarked groupBy-aggregate contract with
-    # gap-merged windows, driver-green r1–r7) folds
     "st03_stream_session_window": "st16_stream_drift_audit",
-    # exact block-dedup family (r8 rotation): t44 (corpus-level
-    # boilerplate heavy-hitter report over the block digest algebra)
-    # takes the slot; t01 (whole-doc digest, driver-green r1–r7) and
-    # t26 fold to it — same sha2-groupBy pipeline
     "t01_exact_dedup": "t48_duplicate_spans",
-    # n-gram membership / capped-postings family (r6 rotation): t34
-    # (positional-q-gram-blocked edit-distance join with levenshtein
-    # verification) takes the slot; t25 (decontamination probe,
-    # driver-green r4–r5) and t02 (exact Jaccard pairs, driver-green
-    # r1–r3) fold — same capped-postings candidate shape
     "t25_decontaminate": "t34_fuzzy_match",
     "t02_ngram_jaccard_pairs": "t34_fuzzy_match",
-    # quality-scoring family: t20 (repetition rules) holds the slot;
-    # t06 is the surface-ratio sibling (driver-green r1–r3)
     "t06_quality_score": "t20_repetition_filter",
-    # token-statistics family: t19's tf staging is the per-(doc,token)
-    # count table; t07 is the per-language roll-up of the same counts
     "t07_token_count": "t45_vocab_growth",
-    # fingerprint family: t22 (winnowing containment) holds the slot;
-    # t08 is the whole-doc rolling-hash sibling (driver-green r1–r3)
     "t08_fingerprint": "t34_fuzzy_match",
-    # exact-dedup family: t26 (paragraph-block dedup — the same
-    # sha2-groupBy pipeline at sub-document grain, driver-green
-    # r5–r6) rides the r8 slot-holder t44 with t01
     "t26_paragraph_dedup": "t48_duplicate_spans",
-    # cluster-split family: t23 (star contraction) / t12 hold the
-    # clustering slots; t33 consumes the same cluster labels for the
-    # leakage-safe split audit (round-5 addition, pytest-only)
-    # MinHash-band family (r6 rotation): t30 (batch-vs-corpus
-    # incremental-ingestion dedup — the production-ingest variant of
-    # the banding + exact-verify pipeline) takes the slot; t03
-    # (within-corpus LSH pairs, driver-green r1–r5) folds
     "t03_minhash_lsh_pairs": "t46_lsh_recall_audit",
-    # clustering family: t23 (star contraction) holds the slot; t12 is
-    # the min-label sibling on the same edge set (driver-green r2–r3)
     "t12_dedup_clusters": "t33_leakage_safe_split",
-    # deterministic-hash sampling family (r8 rotation): t29
-    # (sequence packing — exactly-k per-lane hash ranks) becomes the
-    # family slot-holder; t27 (mixture rebalance, driver-green
-    # r5–r7, whose membership rule IS the same deterministic
-    # key-hash filter) folds, along with t13 (driver-green r1–r4)
-    # and t14
     "t27_mixture_rebalance": "t29_sequence_pack",
     "t13_hash_sample": "t29_sequence_pack",
     "t14_stratified_sample": "t29_sequence_pack",
-    # exactly-k / per-lane deterministic-hash family (r5 rotation):
-    # t29 (sequence packing) takes the slot; t15 (driver-green r1–r4)
-    # is the TakeOrderedAndProject sibling on the same hash keys
     "t15_fixed_size_sample": "t29_sequence_pack",
-    # ...and t38 (deterministic epoch shuffle: global md5-hash ranks
-    # via q31's two-pass machinery) is the full-permutation member of
-    # the same deterministic-hash family (round-5 addition,
-    # pytest-only per the cadence)
     "t38_deterministic_shuffle": "t29_sequence_pack",
-    # ...and t43 (exactly-k per stratum: the balanced-subset cell of
-    # the sampling matrix — keyed hash-rank windows; round-6
-    # addition, pytest-only per the cadence)
     "t43_stratified_exact_k": "t29_sequence_pack",
-    # map-only text-transform family (r5 rotation): t28 (the composed
-    # funnel whose stage 1 IS t18's cleaning rule fused on one scan)
-    # takes the slot; t18 (driver-green r1–r4) and t16 fold
     "t18_clean_text": "t20_repetition_filter",
     "t16_token_chunking": "t20_repetition_filter",
-    # corpus-statistics family: t19 (TF-IDF) holds the slot; t17 is
-    # the bigram-PMI sibling (driver-green r1–r3), same
-    # explode→hash-agg→broadcast-join shape
     "t17_bigram_pmi": "t45_vocab_growth",
-    # ...and t31 (count-min heavy hitters) is the sketch member of the
-    # same token-statistics family (round-5 addition, pytest-only)
-    # keyword-extraction family: t19 (TF-IDF) holds the slot; t35 is
-    # the graph-centrality sibling — TextRank over the co-occurrence
-    # graph, join-based PageRank matvec (round-5 addition, pytest-only)
-    # (t36, the PSI/KL distribution-drift audit over vocabulary-grain
-    # count tables, rotated INTO the gate window in r11 — rotation #8.)
-    # n-gram membership family: t37 (novelty rate — t25's
-    # broadcast-gram-hash probe inverted) folds to t34, the r6
-    # slot-holder for the gram-blocked candidate family
     "t37_ngram_novelty": "t34_fuzzy_match",
-    # t40/t41 (BPE train/encode) rotated INTO the gate window in r7
-    # (VERDICT r6 "Next round" #1) — no fold entries. In exchange,
-    # two multi-round-driver-green corpus-statistics siblings fold:
-    # t21 (bigram LM scoring — the t17-PMI-shaped explode→hash-agg→
-    # broadcast-join pipeline, driver-green r3–r6) and t24 (BM25
-    # ranking — the same tf/df staging as t19 with the probe-scoring
-    # join on top, driver-green r3–r6)
     "t21_bigram_lm_score": "t45_vocab_growth",
     "t24_bm25_ranking": "t45_vocab_growth",
-    # (t42, the pairwise source-overlap Jaccard matrix, rotated INTO
-    # the gate window in r8 — VERDICT r7 "Next round" #1.)
-    # ...and t45 (Heaps'-law vocabulary-growth audit: cumulative
-    # docs/tokens/unigram/bigram vocabulary at ingestion-order decile
-    # boundaries — t37's novelty generalized to the whole-corpus
-    # trajectory; round-8 addition, pytest-only per the cadence) rides
-    # the corpus-statistics family slot
-    # quantized-ANN family (r8 rotation): s19 (IVF-PQ — both
-    # quantizers composed) becomes the family capstone; s14 (product
-    # quantization, driver-green r6–r7), s08 (int8 two-stage,
-    # driver-green r3–r5) and s01 (the exact probe-broadcast sibling,
-    # driver-green r1–r3) fold to it
     "s14_knn_pq": "s18_knn_binary_hamming",
     "s01_knn_bruteforce": "s18_knn_binary_hamming",
-    # (s15, filtered-ANN — s02's pipeline under a metadata predicate —
-    # rotated INTO the gate window in r11 — rotation #8.)
-    # ...s08 is the int8 member of the same candidate → exact-re-rank
-    # shape (folds per the cadence after two driver-green rounds)...
     "s08_knn_quantized": "s18_knn_binary_hamming",
-    # (s18, the binary end of the same quantization ladder — sign-bit
-    # signatures, integer-exact bit_count(xor) hamming candidates,
-    # exact re-rank — rotated INTO the gate window in r11 — rotation
-    # #8 — and now holds the quantized-ANN family slot.)
-    # kNN-join family: s07 (sub-quadratic LSH join) holds the slot;
-    # s06 is its declared exact verifier twin (driver-green r2–r3)
     "s06_knn_join": "s07_knn_join_lsh",
-    # embedding-statistics family (r5 rotation): s10 (label-cohesion
-    # audit — s03's array-math aggregate shape + broadcast
-    # representative join) takes the slot; s03 (driver-green r1–r4)
-    # folds
     "s03_embedding_stats": "s09_maxsim_late_interaction",
-    # (s12, the materialized bucketed-table probe of s02's LSH
-    # pipeline, rotated INTO the gate window in r11 — rotation #8.)
-    # IVF family (r5 rotation, VERDICT r4 #5): s11 — the SAME pipeline
-    # as s04 but probing the materialized cell-partitioned index
-    # (equivalence-tested result identity, shared oracle factory) —
-    # takes the slot; s04 (driver-green r3–r4) folds
     "s04_knn_ivf": "s18_knn_binary_hamming",
-    # IVF family rotation #4 (r7): s19 (IVF-PQ — the two quantizers
-    # composed, the FAISS billion-vector layout) takes the IVF slot
-    # per VERDICT r6 #1; s11 (materialized-index probe, driver-green
-    # r5–r6) folds to it, alongside its existing family members
     "s11_knn_ivf_index_probe": "s18_knn_binary_hamming",
-    # (s20, the IVF index DELETE lifecycle, rotated INTO the gate
-    # window in r8 — VERDICT r7 "Next round" #1.)
-    # ...and s22 (index REBALANCE: generation-swap requantization of a
-    # drifted index, hash-pinned REBALANCE ≡ REBUILD via s04's oracle;
-    # round-8 addition, pytest-only per the cadence) completes the
-    # lifecycle matrix build/append/delete/rebalance
-    # ...and s21 (multi-probe LSH: single-bit-flip probe expansion
-    # over s02's index — recall without more tables; round-6
-    # addition, pytest-only per the cadence) folds to the LSH family
-    # IVF lifecycle: s13 appends a new batch to the s11-built index
-    # with the existing centroids — same probe machinery, s11 holds
-    # the slot (round-5 addition, pytest-only per the cadence)
-    # (s16, hybrid RRF fusion of the t24 sparse and s01-style dense
-    # rankings, rotated INTO the gate window in r11 — rotation #8.)
-    # (s17, the greedy-MMR diversification member of the same
-    # retrieval-scoring family, rotated INTO the gate window in r11 —
-    # rotation #8.)
-    # pull-stream family: st11 (custom Python streaming source) holds
-    # the slot; st01 is the file-staged chunk-pull sibling
-    # (driver-green r1–r3)
     "st01_stream_tumbling_agg": "st11_dice_pull_stream",
-    # streaming-dedup family: st10 (TTL watermark dedup) holds the
-    # slot; st02 is the unbounded-state sibling (driver-green r3)
-    # (st10, the TTL slot-holder st02 used to fold to, itself folded
-    # to st15 in r7 — the family chain re-points to the exposed rep)
     "st02_stream_dedup": "st15_stream_anti_join_dedup",
-    # streaming-aggregation family: st16 (the r6 slot-holder for the
-    # micro-batch aggregate machinery) represents st06, the
-    # sliding-window sibling (driver-green r2–r4)
     "st06_stream_sliding_window": "st16_stream_drift_audit",
-    # stream-stream join family (r6 rotation): st13 (watermark-closed
-    # LEFT OUTER — the production-join semantics, VERDICT r5 #2) takes
-    # the slot; st05 (inner interval join, driver-green r2–r5) folds
     "st05_stream_stream_join": "st20_stream_right_outer_join",
-    # st17 (stream-stream FULL OUTER) rotated INTO the gate window in
-    # r7 (VERDICT r6 #1 — the last unverified join-semantics cell).
-    # In exchange two multi-round-green streaming rows fold:
-    # st09 (RocksDB state-store provider — st04's query with the
-    # provider conf flipped, driver-green r3–r6) rides the
-    # arbitrary-stateful slot-holder...
     "st09_stateful_rocksdb": "st18_stream_decayed_activity",
-    # ...and st10 (TTL watermark dedup, driver-green r3–r6) folds to
-    # the streaming-dedup family's r6 slot-holder st15 (LEFT ANTI
-    # ingestion dedup — same drop-duplicates-by-key contract, static
-    # corpus side instead of TTL state)
     "st10_dedup_within_watermark": "st15_stream_anti_join_dedup",
-    # ...and st19 (LEFT SEMI — the membership cell: converted clicks
-    # emit once, eagerly, with no fan-out; round-6 addition,
-    # pytest-only per the cadence) completes the join matrix
-    # streaming-quality family (r6 rotation): st16 (streamed PSI/KL
-    # drift audit — per-micro-batch count partials, oracle literally
-    # t36's SQL) takes the slot; st12 (quality-filtered stream,
-    # driver-green r5) folds
     "st12_stream_quality_filter": "st16_stream_drift_audit",
-    # arbitrary-stateful family: st04 (the applyInPandasWithState
-    # slot-holder) represents st18, the time-decayed activity fold —
-    # same keyed pandas state contract, with re-anchoring algebra
-    # instead of running totals (round-6 addition, pytest-only per
-    # the cadence)
-    # stream-static join family (r6 rotation): st15 (LEFT ANTI
-    # ingestion dedup against a static corpus — broadcast anti join
-    # re-planned per trigger, no state store) takes the slot; st07
-    # (broadcast dim enrichment, driver-green r2–r5) and st14 (the
-    # ANN-serving variant probing the materialized LSH index per
-    # batch) fold
     "st07_stream_static_join": "st15_stream_anti_join_dedup",
-    # Arrow-decode family (r6 rotation): m10 — the capstone that
-    # decodes a heterogeneous table through ALL FOUR real codecs
-    # (BMP/WAV/AVI/PNG) routed by magic bytes in one Arrow pass —
-    # takes the slot; every single-codec sibling and the stand-in
-    # frame sampler run the same mapInPandas batch shape and fold:
-    # m03 (stand-in frame sampler, driver-green r1–r5)
     "m03_frame_sample": "m10_codec_dispatch",
-    # m06 BMP (driver-green r5), m07 WAV, m08 AVI, m09 PNG — each a
-    # single-codec member whose decode path m10 exercises end-to-end
-    # (m11 scene-cut detection and m12 audio silence segmentation —
-    # the real-media temporal analyses — rotated INTO the gate window
-    # in r8, VERDICT r7 "Next round" #1.) In exchange m01 (metadata
-    # extraction — the same map-only Arrow batch shape, driver-green
-    # r1–r7) folds to the all-codec capstone
     "m01_multimodal_meta": "m10_codec_dispatch",
-    # m13 (cross-codec transcode) rotated INTO the gate window in r7
-    # (VERDICT r6 #1). In exchange two driver-green-since-r1 Arrow
-    # map-batch siblings fold to the m10 capstone (which decodes all
-    # four codecs through the same mapInPandas batch shape):
-    # m02 (feature extraction, driver-green r1–r6)...
     "m02_feature_extract": "m10_codec_dispatch",
-    # ...and m04 (resize/thumbnail, driver-green r1–r6)
     "m04_resize": "m10_codec_dispatch",
-    # weighted-sampling: t39 (Efraimidis-Spirakis hash-deterministic
-    # weighted reservoir — the quality-weighted member of the
-    # deterministic sampling family; round-6 addition); t29 holds
-    # the deterministic-hash sampling slot since r8
     "t39_weighted_sample": "t29_sequence_pack",
-    # simhash family (r6, making room for the q58-q60 lifecycle
-    # queries): t11 (the banded pair join, driver-green r2–r5) keeps
-    # the slot; t04, which emits the signatures t11 pairs on
-    # (driver-green r1–r5), folds
     "t04_simhash": "t34_fuzzy_match",
-    # embedding-neardup family (r6, same reason): t10 — the
-    # hyperplane-LSH scale path — keeps the slot; t09, its exact
-    # blocked-GEMM verifier twin (driver-green r1–r5), folds
     "t09_embedding_neardup": "t47_semantic_dedup",
-    # (t47, the SemDeDup cluster-then-prune member of the
-    # embedding-dedup family, rotated INTO the gate window in r11 —
-    # rotation #8 — and now holds the family slot.)
-    # (t48, the exact-substring duplicated-span member of the
-    # duplicated-text-block family, rotated INTO the gate window in
-    # r11 — rotation #8 — and now holds the family slot.)
-    # ...and m15 (audio-fingerprint near-dup — same banded-LSH dedup
-    # family as the exposed m14 image member; round-10 addition,
-    # pytest-only per the cadence, rotation candidate for r11)
-    # (m15, the audio-fingerprint near-dup member of the banded-LSH
-    # dedup family, rotated INTO the gate window in r11 — rotation #8.)
-    # ...and s24 (recall-vs-probe-budget curve — same audit family as
-    # the exposed s23 fixed-budget recall audit; round-10 addition,
-    # pytest-only per the cadence, rotation candidate for r11)
-    # (s24, the recall-vs-probe-budget curve member of the recall-
-    # audit family, rotated INTO the gate window in r11 — rotation #8.)
-    # ...and st22 (streaming PII audit — t49's detector per
-    # micro-batch, the same map-only-expressions-over-a-stream member
-    # of the streaming-quality family whose slot-holder is the
-    # exposed st16; round-11 addition, pytest-only per the cadence,
-    # rotation candidate for r12)
     "st22_stream_pii_audit": "st16_stream_drift_audit",
-    # ...and m16 (video-fingerprint near-dup — the VIDEO member of
-    # the same banded-LSH dedup family as the exposed m15 audio
-    # capstone, closing the last near-dup modality gap; round-11
-    # addition, pytest-only per the cadence, rotation candidate
-    # for r12)
     "m16_video_fingerprint_neardup": "m15_audio_fingerprint_neardup",
-    # ...and t49 (PII detection/redaction — regex match counts +
-    # chained regexp_replace, the same map-only single-scan
-    # per-document expression shape as the exposed t20; round-11
-    # addition, pytest-only per the cadence, rotation candidate
-    # for r12)
     "t49_pii_redact": "t20_repetition_filter",
-    # ...and t50 (bigram-LM perplexity scoring — the LM member of the
-    # quality-lens family whose heuristic members t06/t20/t21 the
-    # exposed t20 represents; round-11 addition, pytest-only per the
-    # cadence, rotation candidate for r12)
     "t50_bigram_perplexity": "t20_repetition_filter",
-    # ...and s25 (embedding-outlier curation — centroid-distance
-    # scoring, the audit/curation member of the similarity family
-    # whose exposed slot-holder is the s23 recall audit; round-11
-    # addition, pytest-only per the cadence, rotation candidate for
-    # r12)
     "s25_embedding_outliers": "s23_recall_audit",
-    # ...and st23 (streaming profile audit — q71's Analyzer metrics
-    # per micro-batch, the same bounded-state micro-batch aggregate
-    # family whose slot-holder is the exposed st16; round-11
-    # addition, pytest-only per the cadence, rotation candidate
-    # for r12)
     "st23_stream_profile_audit": "st16_stream_drift_audit",
-    # ...and t51 (learned multinomial-NB classifier — the trained
-    # member of the quality/filtering family whose heuristic members
-    # the exposed t20 represents, and whose model-fit + broadcast-
-    # score shape is t50's; round-11 addition, pytest-only per the
-    # cadence, rotation candidate for r12)
     "t51_nb_classifier": "t20_repetition_filter",
 }
 
 PYTEST_ONLY: frozenset[str] = frozenset(PYTEST_ONLY_FAMILY) | frozenset(
     {
-        # ROTATION #8 q-family folds (r11, VERDICT r10 "Next round"
-        # #1), each driver-green for 2+ rounds, each family still
-        # represented: q62 sole-late-supplier (green r8-r10; joins
-        # keep q03 and the multi-join/anti machinery stays pinned by
-        # its property tests), q65 value concentration (green r9-r10;
-        # q01 keeps the aggregation slot), q69 scalar exact percentile
-        # (green r8-r10; q70, the strictly-more-general GROUPED exact
-        # percentile on the same bounded-memory bisection machinery,
-        # keeps the slot):
         "q62_sole_late_supplier",
         "q65_value_concentration",
         "q69_exact_percentile_scalable",
-        # per-column data profiling (round-11 addition, q-family
-        # fold per the birth cadence; q48 — the Check half of the
-        # same Deequ shape — held a gate slot r5-r7 and q01 keeps
-        # the aggregation-family slot)
         "q71_data_profile",
-        # ROTATION #7 q-family folds (r10, VERDICT r9 "Next round"
-        # #1), each driver-green for 3+ rounds, each family still
-        # represented: q17 global top-k (green r1-r9; the
-        # TakeOrderedAndProject plan stays pinned by its property
-        # tests and t29's exactly-k windows keep ordered-limit
-        # machinery driver-checked), q64 incremental JOIN-view
-        # maintenance (green r7-r9; joins keep q03/q62 and the q58
-        # lifecycle keeps incremental maintenance), q68
-        # interval-overlap join (green r7-r9; q62's multi-join shape
-        # and q03 keep the join family):
         "q17_topk_global",
         "q64_incremental_join",
         "q68_interval_overlap_join",
@@ -637,11 +255,6 @@ PYTEST_ONLY: frozenset[str] = frozenset(PYTEST_ONLY_FAMILY) | frozenset(
         "q15_window_lag_lead",
         "q16_window_ranks",
         "q18_union",
-        # intersect (r6 rotation): q19 (driver-green r1–r5) folds with
-        # its set-op siblings; since r7 the set-op family's gate
-        # representative is q67 (bag set ops — exceptAll/intersectAll,
-        # the strictly-more-general multiplicity algebra), restoring
-        # the family-coverage rule ADVICE r6 flagged
         "q19_intersect",
         "q20_except",
         "q21_distinct",
@@ -649,17 +262,9 @@ PYTEST_ONLY: frozenset[str] = frozenset(PYTEST_ONLY_FAMILY) | frozenset(
         "q23_case_bucketize",
         "q24_json_extract",
         "q25_time_bucket",
-        # sessionize (r5 rotation): q26 (driver-green r1–r4) folds to
-        # make room for q41; q27 keeps the scalar/sequence-family slot
         "q26_sessionize",
-        # recursive CTE (r7 rotation): q41 (driver-green r5–r6) folds
-        # to make room for the rotate-ins; q27 keeps the
-        # scalar/sequence-family slot and q41 stays oracle-verified
-        # every pytest run
         "q41_recursive_calendar",
         "q28_pivot",
-        # (q69/q70, the bounded-memory exact percentiles, rotated
-        # INTO the gate window in r8 — VERDICT r7 "Next round" #1.)
         "q29_quantiles",
         "q30_salted_skew_agg",
         "q32_approx_distinct",
@@ -669,87 +274,27 @@ PYTEST_ONLY: frozenset[str] = frozenset(PYTEST_ONLY_FAMILY) | frozenset(
         "q36_array_functions",
         "q37_approx_quantiles",
         "q38_funnel",
-        # salted JOIN (round-5 addition, q-family fold like its agg
-        # twin q30; q03 keeps the join-family slot)
         "q42_salted_skew_join",
-        # LATERAL decorrelation (round-5 addition, q-family fold;
-        # q34 keeps the subquery-family exposure via q27's group)
         "q43_lateral_topk_join",
-        # IGNORE NULLS forward-fill (round-5 addition, q-family fold;
-        # q31/q39 keep the window-family slots)
         "q44_forward_fill",
-        # skew diagnosis (round-5 addition, q-family fold; pairs with
-        # q30/q42's remediation)
         "q45_skew_audit",
-        # semi-join reduction (round-5 addition, q-family fold; q03
-        # keeps the join-family slot)
         "q46_semijoin_reduction",
-        # statistical/regression aggregates (round-5 addition,
-        # q-family fold; q01 keeps the aggregation-family slot)
         "q47_grouped_stats",
-        # declarative constraint audit (round-5 addition, q-family
-        # fold; q01/q03 keep the agg/join-family slots)
         "q48_constraint_audit",
-        # incremental aggregate maintenance (round-5 addition,
-        # q-family fold; oracle = full recompute)
         "q49_incremental_agg",
-        # TPC-H Q5 composite flagship (round-5 addition, q-family
-        # fold; q03/q04 keep the join-family slots)
         "q50_local_supplier_revenue",
-        # SCD2 dimension versioning (round-5 addition, q-family fold;
-        # the merge_upsert sibling)
         "q51_scd2_upsert",
-        # as-of with tolerance (round-5 addition, q-family fold; q08
-        # keeps the as-of-family slot)
         "q52_asof_tolerance_join",
-        # UNPIVOT/melt (round-5 addition, q-family fold; q28's pivot
-        # keeps the reshape-family exposure via q01's group)
         "q53_unpivot_metrics",
-        # MAD robust outlier audit (round-5 addition, q-family fold;
-        # q29/q47 keep the quantile/statistics slots via q01's group)
         "q54_mad_outlier_audit",
-        # time-weighted average (round-5 addition, q-family fold;
-        # q39/q25 keep the temporal-window slots)
         "q55_time_weighted_avg",
-        # bloom-filter join pruning (round-5 addition, q-family fold;
-        # q46's semi-join reduction is the exact-key sibling, q03
-        # keeps the join-family slot)
         "q56_bloom_join_pruning",
-        # cohort retention matrix (round-5 addition, q-family fold;
-        # q01 keeps the aggregation-family slot)
         "q57_cohort_retention",
-        # (q61, the snapshot-diff/CDC delta, rotated INTO the gate
-        # window in r9 — VERDICT r8 "Next round" #3.)
-        # (q62, the sole-late-supplier TPC-H Q21 shape — non-vacuous
-        # at every generated SF since the r7 fixture fix — rotated
-        # INTO the gate window in r8, VERDICT r7 "Next round" #1.)
-        # r8 q-family folds making room for the rotate-ins (each
-        # driver-green for 2+ rounds, each family still represented):
-        # q08 as-of join (driver-green r1–r7; joins keep q03/q64/q68
-        # and the rotate-in q62's multi-join shape)...
         "q08_asof_join",
-        # ...q39 time-range RANGE window (driver-green r1–r7; q31
-        # keeps the window-family slot)...
         "q39_time_range_window",
-        # ...and the q58 lifecycle's two siblings (driver-green
-        # r6–r7; q58 merge-upsert keeps the lifecycle slot):
         "q59_zorder_lifecycle",
         "q60_schema_evolution_read",
-        # (q63, the running-distinct window rewrite, rotated INTO the
-        # gate window in r9; it takes over the window-family slot from
-        # q31, which folds below.)
-        # scalable global ranks (driver-green r2-r8): q63's
-        # first-occurrence running-distinct rewrite exercises the same
-        # window machinery and holds the family slot from r9
         "q31_global_ranks_scalable",
-        # q64 (incremental JOIN-view maintenance) rotated INTO the
-        # gate window in r7 (VERDICT r6 #1).
-        # (q65, the value-concentration TPC-H Q11 shape, rotated INTO
-        # the gate window in r9 — VERDICT r8 "Next round" #3.)
-        # q66 (GROUPED_AGG pandas UDAF), q67 (bag set ops — the
-        # set-op family's new gate representative, ADVICE r6 #3) and
-        # q68 (interval-overlap join) rotated INTO the gate window in
-        # r7 (VERDICT r6 #1).
     }
 )
 
@@ -825,7 +370,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-FAN_OUT_MULT = float(os.environ.get("SPARK_GRAFT_FAN_OUT_MULT", "2"))
+FAN_OUT_MULT = 2
 
 
 def fan_out(df: DataFrame, n: int | None = None) -> DataFrame:
@@ -836,13 +381,10 @@ def fan_out(df: DataFrame, n: int | None = None) -> DataFrame:
     see CPU cost. Explicit numPartitions on purpose: AQE's coalescing
     also targets bytes and would undo an implicit repartition().
 
-    Width = cores × FAN_OUT_MULT (env SPARK_GRAFT_FAN_OUT_MULT).
-    2× runs every Python/Arrow stage as two task waves — the second
-    wave backfills stragglers when the box is contended (r11 measured
-    1× spiking 3-5× under steal bursts); 1× is one wave and measured
-    ~30% faster on a QUIET box (fewer per-task Arrow worker hops).
-    The knob exists so both regimes are reachable without code edits;
-    the default is re-adjudicated on quiet-box evidence per round."""
+    Width = cores × FAN_OUT_MULT. 2× runs every Python/Arrow stage as
+    two task waves — the second wave backfills stragglers when the box
+    is contended (1× measured spiking 3-5× under steal bursts, though
+    ~30% faster on a quiet box)."""
     n = n or max(
         1, int(df.sparkSession.sparkContext.defaultParallelism * FAN_OUT_MULT)
     )

@@ -12,6 +12,27 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Heap ceiling: local mode is ONE JVM, and a heap sized near physical
+# RAM (96g on a 125 GiB box) let G1 grow young gen into tens of GB of
+# never-touched address space — every expansion faulted+zeroed pages
+# (measured ~25 cores of SYSTEM time and 2-20× run-to-run variance on
+# identical queries). Cluster deployments size executor heaps
+# per-container anyway.
+DRIVER_MEMORY_CAP_GIB = 20
+
+
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Half the host's RAM in whole GiB (at least 1), capped at
+    DRIVER_MEMORY_CAP_GIB; the cap itself when RAM is unreadable."""
+    try:
+        with open(meminfo) as f:
+            kib = next(
+                int(line.split()[1]) for line in f if line.startswith("MemTotal:")
+            )
+    except (OSError, StopIteration):
+        return f"{DRIVER_MEMORY_CAP_GIB}g"
+    return f"{max(1, min(DRIVER_MEMORY_CAP_GIB, kib // (2 << 20)))}g"
+
 
 def get_spark(
     app_name: str = "fsharp_mapreduce_spark",
@@ -21,11 +42,14 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the tuned SparkSession.
 
-    Honors ``SPARK_GRAFT_CPUS`` for local parallelism (bench contract).
-    On a real cluster, ``master`` comes from spark-submit and the
-    local[] default here is ignored.
+    Local parallelism defaults to the cores this process may run on
+    (affinity-aware, unlike os.cpu_count) and the driver heap to
+    ``default_driver_memory``; ``SPARK_GRAFT_CPUS`` and
+    ``SPARK_DRIVER_MEMORY`` override them. On a real cluster,
+    ``master`` comes from spark-submit and the local[] default here is
+    ignored.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     master = master or f"local[{cpus}]"
     # Rule of thumb: shuffle partitions ≈ cores in local mode; on a
     # cluster this is overridden upward (2-3× total cores) and AQE
@@ -57,16 +81,10 @@ def get_spark(
         # even customer at moderate SF) should broadcast, not shuffle.
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
-        # 20g, NOT most-of-the-box: local[32] is one JVM, and a heap
-        # sized near physical RAM (the old 96g default on a 125 GiB
-        # box) let G1 grow young gen into tens of GB of never-touched
-        # address space — every expansion faulted+zeroed pages in the
-        # kernel (measured ~25 cores of SYSTEM time in /proc/stat and
-        # 2-20× run-to-run variance on identical queries; 20g is
-        # bit-identical results, stable timings). Cluster deployments
-        # size executor heaps per-container anyway; override via
-        # SPARK_DRIVER_MEMORY when a workload genuinely needs more.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "20g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory(),
+        )
         # Managed tables (bucketed writes) land in /tmp, never the repo.
         .config(
             "spark.sql.warehouse.dir",

@@ -123,40 +123,23 @@ def read_pull_stream(
     )
 
 
-# State/shuffle partition count for the bounded fixture replays. The
-# number of state-store instances a streaming query commits PER
-# TRIGGER equals spark.sql.shuffle.partitions at query start; with the
-# session default (32) each ~15k-row micro-batch paid 32 task launches
-# + 32 state-store commits per stateful stage per trigger — measured
-# 4.2s → 2.0s on st01 just by sizing this to 8 (VERDICT r9 #7: the
-# streaming bench rows were ~10 triggers × ~1.4s of exactly this).
-# r11 optimization round: the same curve continues — on the r11 box
-# st01 read 5.6s/3.8s/2.8s at 8/4/2 partitions (st04 8.9/7.3/7.0),
-# results bit-identical at every setting (asserted in the experiment
-# and pinned by the partition-invariance tests), so the fixture
-# default drops to 2: a ~15k-row micro-batch does not need more than
-# two state-store instances per stateful operator. parts=1 measured
-# within noise of 2 — kept at 2 so the keyed-exchange path stays
-# exercised. This is the same sizing rule as everywhere else in the
-# repo: fit partitions to the data in flight, not to the box. A
-# production deployment at 100 TB sizes UP from its own trigger
-# volume (env-overridable here); results are partition-count-
-# invariant (stream-batch parity oracles + partition-invariance
-# tests pin that).
-STREAM_FIXTURE_SHUFFLE_PARTITIONS = int(
-    os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "2")
-)
+# State/shuffle partition count for the bounded fixture replays. A
+# streaming query commits one state-store instance per shuffle
+# partition PER TRIGGER, so the session default (one per core) pays
+# that many task launches + commits on every ~15k-row micro-batch.
+# st01 measured 5.6s/3.8s/2.8s at 8/4/2 partitions with bit-identical
+# results; 1 was within noise of 2, and 2 keeps the keyed-exchange path
+# exercised. Fit partitions to the data in flight, not to the box:
+# results are partition-count-invariant (stream-batch parity oracles +
+# partition-invariance tests pin that).
+STREAM_FIXTURE_SHUFFLE_PARTITIONS = 2
 
-# applyInPandasWithState queries are the exception to the 2-partition
-# fixture default: their per-trigger cost is the PYTHON worker loop
-# over state keys (one fold call per key through the Arrow bridge), so
-# partitions buy key-level parallelism, not just smaller state files.
-# Measured fresh-process A/B on st04 (r11): parts=8 → 6.0-7.1 s,
-# parts=2 → 10.7-11.3 s — opposite direction to every JVM-stateful
-# row. Production sizing follows keys-per-worker, not bytes.
-STREAM_PANDAS_STATE_PARTITIONS = int(
-    os.environ.get("SPARK_GRAFT_STREAM_PANDAS_PARTITIONS", "8")
-)
+# applyInPandasWithState queries are the exception: their per-trigger
+# cost is the PYTHON worker loop over state keys (one fold call per key
+# through the Arrow bridge), so partitions buy key-level parallelism.
+# Measured fresh-process A/B on st04: parts=8 → 6.0-7.1 s, parts=2 →
+# 10.7-11.3 s — opposite direction to every JVM-stateful row.
+STREAM_PANDAS_STATE_PARTITIONS = 8
 
 
 @contextmanager

@@ -12,7 +12,8 @@ SF_CORRECT = os.environ.get("SPARK_GRAFT_CORRECT_DIR", "/root/testdata/sf0.01")
 
 @pytest.fixture(scope="session")
 def spark():
-    # Small driver memory for tests; bench overrides via env.
+    # A fixed, small driver heap for tests (get_spark would size it
+    # from the host).
     os.environ.setdefault("SPARK_DRIVER_MEMORY", "8g")
     s = get_spark(app_name="fsharp_mapreduce_spark-tests", shuffle_partitions=8)
     yield s
@@ -28,8 +29,7 @@ def _drop_leaked_caches(request):
     """ADVICE r2 (persist leak): registered queries persist()
     intermediates that only release with the DataFrame — across a
     75-query differential session those blocks accumulate in executor
-    storage. Drop them after each test that used the shared session
-    (bench.py does the same between runs)."""
+    storage. Drop them after each test that used the shared session."""
     yield
     if "spark" in request.fixturenames:
         request.getfixturevalue("spark").catalog.clearCache()

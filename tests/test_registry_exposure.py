@@ -11,7 +11,6 @@ similarity, multimodal, streaming) must all occupy gate slots.
 
 from __future__ import annotations
 
-import json
 import re
 
 from fsharp_mapreduce_spark.registry import (
@@ -82,462 +81,3 @@ def test_every_pytest_only_query_has_oracle_or_reason():
 
 def test_flagship_exposed():
     assert "q27_dice_frequency" in exposed_queries()
-
-
-def test_bench_summary_line_fits_tail():
-    """VERDICT r4 #1: the driver captures only a ~2000-char stdout
-    TAIL; round 4's 6 KB final JSON line was truncated mid-object and
-    the round's bench artifact recorded `parsed: null`. The final line
-    is now a short summary object — pin that it stays far below the
-    tail size even with every optional field populated."""
-    import json
-
-    import bench
-
-    result = {
-        "metric": "sum of per-query median wall-clock, headline queries",
-        "value": 12345.6789,
-        "unit": "sec",
-        "queries": {n: 99.9999 for n in bench.HEADLINE},
-        "spread": {n: [99.0, 100.0] for n in bench.HEADLINE},
-        "sf": 0.1,
-        "dice_mr_compat_5m": 12.3456,
-        "duckdb_value": 12345.6789,
-        # r7 contention-evidence fields (VERDICT r6 #2), every one
-        # populated at its widest plausible width
-        "dice_anchor_band": [1.3, 2.1],
-        "dice_anchor_attempts": [
-            {"value": 99.9999, "load1": 99.99, "load5": 99.99, "floor_ms": 9999.9}
-        ]
-        * bench.DICE_ANCHOR_MAX_ATTEMPTS,
-        "contention": {
-            g: {
-                "load1": 99.99,
-                "load5": 99.99,
-                "floor_ms": 9999.9,
-                "post_floor_ms": 9999.9,
-                "post_load1": 99.99,
-                "contended": True,  # widest: every group named in summary
-                "attempts": [
-                    {"load1": 99.99, "floor_ms": 9999.9, "sum_s": 9999.9}
-                ]
-                * bench.GROUP_MAX_ATTEMPTS,
-            }
-            for g in ("q", "t", "s", "stm")
-        },
-    }
-    line = json.dumps(bench.summary_obj(result))
-    assert len(line) <= 400, f"summary line {len(line)} bytes > 400"
-    assert "queries" not in bench.summary_obj(result)
-
-
-def test_bench_covers_every_exposed_family():
-    """VERDICT r3 #7: every gate-exposed query's operator family has a
-    bench row — directly in HEADLINE or via a declared FAMILY_COVERAGE
-    representative that IS in HEADLINE."""
-    import bench
-
-    headline = set(bench.HEADLINE)
-    unknown = headline - set(QUERIES)
-    assert not unknown, f"HEADLINE names not in registry: {sorted(unknown)}"
-    for name in exposed_queries():
-        if name in headline:
-            continue
-        rep = bench.FAMILY_COVERAGE.get(name)
-        assert rep, f"exposed query {name} has no bench row and no FAMILY_COVERAGE entry"
-        assert rep in headline, f"{name}: coverage rep {rep} is not in HEADLINE"
-
-
-def test_dice_anchor_self_adjudication():
-    """VERDICT r6 #2: an out-of-band anchor reading triggers automatic
-    re-measurement (fresh JVM per attempt), every attempt is recorded
-    with its contention snapshot, and the recorded value is the min
-    across attempts (contention only inflates). In-band first readings
-    measure exactly once."""
-    import bench
-
-    lo, hi = bench.DICE_ANCHOR_BAND
-    busy = {"load1": 14.5, "load5": 12.0, "floor_ms": 9999.9}
-    busy_snap = lambda: dict(busy)  # noqa: E731
-
-    # in-band first reading: one attempt, value passed through
-    readings = iter([lo + 0.1])
-    val, attempts = bench.measure_dice_anchor(
-        3, _measure_once=lambda: next(readings), _snapshot=busy_snap
-    )
-    assert val == lo + 0.1
-    assert len(attempts) == 1
-    assert {"value", "load1", "load5", "floor_ms"} <= set(attempts[0])
-
-    # contention-inflated first reading, quiet re-run: stops at the
-    # first in-band attempt, records both, returns the min
-    readings = iter([hi * 2, lo + 0.2, lo + 0.5])
-    val, attempts = bench.measure_dice_anchor(
-        3, _measure_once=lambda: next(readings), _snapshot=busy_snap
-    )
-    assert val == lo + 0.2
-    assert len(attempts) == 2
-
-    # persistently-busy box: exhausts DICE_ANCHOR_MAX_ATTEMPTS and
-    # records the minimum inflated reading (the explicit-adjudication
-    # path — main() adds dice_anchor_adjudication to the payload)
-    readings = iter([hi * 3, hi * 2.5, hi * 2.1, hi * 9])
-    val, attempts = bench.measure_dice_anchor(
-        3, _measure_once=lambda: next(readings), _snapshot=busy_snap
-    )
-    assert len(attempts) == bench.DICE_ANCHOR_MAX_ATTEMPTS
-    assert val == hi * 2.1
-
-
-def test_dice_anchor_accepts_out_of_band_on_quiet_floor():
-    """r9 + ADVICE r9 #1: an out-of-band reading with floor-quiet pre
-    AND post probes is this HOST's honest speed (the band is committed
-    from other hosts), not contention — but a burst that starts after
-    the pre probe and ends before the post probe is invisible to both,
-    so acceptance requires ONE confirming floor-quiet re-run; the
-    recorded value is the min of the two quiet readings. A busy floor
-    on either side still re-runs without counting toward acceptance."""
-    import bench
-
-    lo, hi = bench.DICE_ANCHOR_BAND
-    quiet = {"load1": 0.2, "load5": 0.3, "floor_ms": 72.0}
-    readings = iter([hi + 0.7, hi + 0.5, hi + 0.6])
-    val, attempts = bench.measure_dice_anchor(
-        3, _measure_once=lambda: next(readings), _snapshot=lambda: dict(quiet)
-    )
-    assert val == hi + 0.5  # min of the two quiet out-of-band readings
-    assert len(attempts) == 2
-    assert attempts[0]["out_of_band_quiet"] is True
-    assert attempts[1]["out_of_band_quiet"] is True
-
-    # quiet pre but busy post floor (contention arrived mid-run):
-    # NOT accepted and NOT counted toward quiet-acceptance — re-runs;
-    # the two subsequent floor-quiet out-of-band readings then accept
-    # with their min
-    snaps = iter(
-        [quiet, {"load1": 9.0, "load5": 4.0, "floor_ms": 9999.9}]
-        + [quiet] * 4
-    )
-    readings = iter([hi + 2.0, hi + 0.4, hi + 0.9])
-    val, attempts = bench.measure_dice_anchor(
-        3, _measure_once=lambda: next(readings), _snapshot=lambda: dict(next(snaps))
-    )
-    assert val == hi + 0.4
-    assert len(attempts) == 3
-    assert "out_of_band_quiet" not in attempts[0]
-    assert attempts[1]["out_of_band_quiet"] is True
-    assert attempts[2]["out_of_band_quiet"] is True
-
-
-def test_group_self_adjudication():
-    """VERDICT r7 #3: a group whose floor probe exceeds the calibrated
-    quiet band (before or after its JVM ran) is re-run with bounded
-    retries; every attempt is recorded; a clean re-run's timings are
-    used as-is; exhausted retries take the per-query minimum and flag
-    the group ``contended: true`` machine-readably."""
-    import bench
-
-    quiet = {"load1": 1.0, "load5": 1.0, "floor_ms": 80.0}
-    busy = {"load1": 14.5, "load5": 12.0, "floor_ms": 300.0}
-
-    def payloads(vals):
-        return iter([{"queries": dict(v), "spread": {}} for v in vals])
-
-    # quiet first attempt: one run, timings passed through
-    snaps = iter([quiet, quiet])
-    runs = payloads([{"a": 1.0, "b": 2.0}])
-    t, _, meta = bench.measure_group(
-        "s", ["a", "b"], 1,
-        _run_once=lambda: next(runs), _snapshot=lambda: dict(next(snaps)),
-    )
-    assert t == {"a": 1.0, "b": 2.0}
-    assert meta["contended"] is False
-    assert len(meta["attempts"]) == 1
-
-    # contended first attempt, quiet second: the CLEAN attempt's
-    # timings are used (not the min — the first run is known-polluted)
-    snaps = iter([busy, busy, quiet, quiet])
-    runs = payloads([{"a": 8.2}, {"a": 1.1}])
-    t, _, meta = bench.measure_group(
-        "s", ["a"], 1,
-        _run_once=lambda: next(runs), _snapshot=lambda: dict(next(snaps)),
-    )
-    assert t == {"a": 1.1}
-    assert meta["contended"] is False
-    assert len(meta["attempts"]) == 2
-    assert meta["attempts"][0]["floor_ms"] == 300.0  # evidence recorded
-
-    # contention arriving MID-group (quiet pre, busy post) also
-    # triggers the re-run — the r7 failure mode was a JVM that
-    # launched before the wait logic could see the load spike
-    snaps = iter([quiet, busy, quiet, quiet])
-    runs = payloads([{"a": 5.0}, {"a": 1.2}])
-    t, _, meta = bench.measure_group(
-        "s", ["a"], 1,
-        _run_once=lambda: next(runs), _snapshot=lambda: dict(next(snaps)),
-    )
-    assert t == {"a": 1.2}
-    assert meta["contended"] is False
-
-    # persistently-busy box: retries exhaust, per-query min recorded,
-    # contended flag set, and the summary line names the group
-    snaps = iter([busy] * 2 * bench.GROUP_MAX_ATTEMPTS)
-    runs = payloads([{"a": 8.2, "b": 3.0}, {"a": 6.5, "b": 3.5}, {"a": 7.0, "b": 2.9}])
-    t, _, meta = bench.measure_group(
-        "s", ["a", "b"], 1,
-        _run_once=lambda: next(runs), _snapshot=lambda: dict(next(snaps)),
-    )
-    assert t == {"a": 6.5, "b": 2.9}
-    assert meta["contended"] is True
-    assert len(meta["attempts"]) == bench.GROUP_MAX_ATTEMPTS
-
-    summary = bench.summary_obj(
-        {
-            "metric": "m", "value": 1.0, "unit": "sec", "sf": 0.1,
-            "queries": {"a": 1.0},
-            "contention": {"s": meta, "q": {"load1": 1.0, "contended": False}},
-        }
-    )
-    assert summary["contended_groups"] == ["s"]
-
-
-def test_group_post_criterion_is_floor_only():
-    """VERDICT r8 #2 — the r8 driver kill: post-group load1 still
-    carries the group's OWN just-exited local[32] JVM, so a load1 gate
-    there self-triggers re-runs of every long group. The POST
-    criterion is floor-only: quiet pre + (floor-quiet, load-high) post
-    must be accepted WITHOUT a re-run."""
-    import bench
-
-    quiet = {"load1": 1.0, "load5": 1.0, "floor_ms": 80.0}
-    # the exact r8 driver tail: post floor 70ms (quiet), post load1
-    # 5.1+ (the bench's own work) — under the old AND-criterion this
-    # re-ran; it must not
-    self_load = {"load1": 14.0, "load5": 9.0, "floor_ms": 70.0}
-    snaps = iter([quiet, self_load])
-    runs = iter([{"queries": {"a": 1.0}, "spread": {}}])
-    t, _, meta = bench.measure_group(
-        "stm", ["a"], 1,
-        _run_once=lambda: next(runs), _snapshot=lambda: dict(next(snaps)),
-    )
-    assert t == {"a": 1.0}
-    assert meta["contended"] is False
-    assert len(meta["attempts"]) == 1
-
-    # but a genuinely-pressured post floor STILL re-runs
-    busy_floor = {"load1": 2.0, "load5": 2.0, "floor_ms": 300.0}
-    snaps = iter([quiet, busy_floor, quiet, quiet])
-    runs = iter(
-        [{"queries": {"a": 5.0}, "spread": {}},
-         {"queries": {"a": 1.1}, "spread": {}}]
-    )
-    t, _, meta = bench.measure_group(
-        "stm", ["a"], 1,
-        _run_once=lambda: next(runs), _snapshot=lambda: dict(next(snaps)),
-    )
-    assert t == {"a": 1.1}
-    assert len(meta["attempts"]) == 2
-
-
-def test_group_pre_criterion_is_floor_only():
-    """VERDICT r8 #2 completed (r9): the PRE snapshot of every group
-    after the first carries the PREVIOUS group's (or the dice
-    anchor's) just-exited local[32] JVM in load1 — the r9 full run
-    showed 'group q pre load1=16.75, pre floor=78.5ms' right after the
-    anchor on an otherwise idle box, so every group re-ran and the
-    whole table was flagged contended (the r8 kill loop, one slot
-    later). A (floor-quiet, load-high) PRE must be accepted without a
-    re-run; load1 stays in the snapshot as recorded evidence."""
-    import bench
-
-    # the exact r9 observation: floor well inside the band, load1 from
-    # the anchor JVM that exited moments earlier
-    inherited_load = {"load1": 16.75, "load5": 8.0, "floor_ms": 78.5}
-    quiet = {"load1": 1.0, "load5": 1.0, "floor_ms": 80.0}
-    snaps = iter([inherited_load, quiet])
-    runs = iter([{"queries": {"a": 1.0}, "spread": {}}])
-    t, _, meta = bench.measure_group(
-        "q", ["a"], 1,
-        _run_once=lambda: next(runs), _snapshot=lambda: dict(next(snaps)),
-    )
-    assert t == {"a": 1.0}
-    assert meta["contended"] is False
-    assert len(meta["attempts"]) == 1
-    assert meta["attempts"][0]["load1"] == 16.75  # evidence recorded
-
-    # a genuinely-pressured PRE floor still re-runs
-    busy_floor = {"load1": 2.0, "load5": 2.0, "floor_ms": 300.0}
-    snaps = iter([busy_floor, quiet, quiet, quiet])
-    runs = iter(
-        [{"queries": {"a": 5.0}, "spread": {}},
-         {"queries": {"a": 1.1}, "spread": {}}]
-    )
-    t, _, meta = bench.measure_group(
-        "q", ["a"], 1,
-        _run_once=lambda: next(runs), _snapshot=lambda: dict(next(snaps)),
-    )
-    assert t == {"a": 1.1}
-    assert meta["contended"] is False
-    assert len(meta["attempts"]) == 2
-
-
-def test_group_budget_suppresses_reruns():
-    """VERDICT r8 #1b: once the global wall-clock budget is spent, a
-    contended group keeps its first attempt (flagged contended)
-    instead of re-running into the driver's kill window."""
-    import bench
-
-    busy = {"load1": 14.5, "load5": 12.0, "floor_ms": 300.0}
-    snaps = iter([busy] * 2)
-    runs = iter([{"queries": {"a": 8.2}, "spread": {}}])
-    t, _, meta = bench.measure_group(
-        "s", ["a"], 1,
-        _run_once=lambda: next(runs),
-        _snapshot=lambda: dict(next(snaps)),
-        _deadline_passed=lambda: True,
-    )
-    assert t == {"a": 8.2}
-    assert meta["contended"] is True
-    assert len(meta["attempts"]) == 1
-
-
-def test_contended_spread_follows_minimum_attempt():
-    """ADVICE r8 #4: on an exhausted-retries group the recorded value
-    is the per-query MIN across attempts — the spread must come from
-    the attempt that supplied each minimum, not the last attempt."""
-    import bench
-
-    busy = {"load1": 14.5, "load5": 12.0, "floor_ms": 300.0}
-    snaps = iter([busy] * 2 * bench.GROUP_MAX_ATTEMPTS)
-    runs = iter(
-        [
-            {"queries": {"a": 8.2, "b": 3.0},
-             "spread": {"a": [8.0, 8.4], "b": [2.9, 3.1]}},
-            {"queries": {"a": 6.5, "b": 3.5},
-             "spread": {"a": [6.4, 6.6], "b": [3.4, 3.6]}},
-            {"queries": {"a": 7.0, "b": 2.9},
-             "spread": {"a": [6.9, 7.1], "b": [2.8, 3.0]}},
-        ]
-    )
-    t, spread, meta = bench.measure_group(
-        "s", ["a", "b"], 1,
-        _run_once=lambda: next(runs), _snapshot=lambda: dict(next(snaps)),
-    )
-    assert t == {"a": 6.5, "b": 2.9}
-    assert spread == {"a": [6.4, 6.6], "b": [2.8, 3.0]}
-    assert meta["contended"] is True
-
-
-def test_partial_run_never_writes_detail_file(tmp_path, monkeypatch):
-    """VERDICT r8 #3: a --queries smoke run must NOT clobber
-    BENCH_DETAIL.json — commit a79f9ac reduced the committed 98-row
-    table of record to one row exactly this way. Only full-HEADLINE
-    runs own the detail file."""
-    import sys
-
-    import bench
-
-    detail = bench.Path(bench.__file__).resolve().parent / "BENCH_DETAIL.json"
-    before = detail.read_text() if detail.exists() else None
-    monkeypatch.setattr(
-        bench, "run_spark", lambda sf_dir, runs, names, spread: {"a": 1.0}
-    )
-    monkeypatch.setattr(
-        sys, "argv", ["bench.py", "--queries", "a", "--runs", "1"]
-    )
-    bench.main()
-    after = detail.read_text() if detail.exists() else None
-    assert after == before
-
-
-def test_no_duckdb_run_never_degrades_committed_detail(tmp_path, monkeypatch):
-    """VERDICT r9 #3: a full-HEADLINE run WITHOUT --duckdb must not
-    overwrite a committed BENCH_DETAIL.json that carries a
-    duckdb_queries map (the r9 driver run dropped the committed
-    104-row record's baseline column exactly this way) — it writes the
-    sibling BENCH_DETAIL_driver.json instead. A --duckdb run, and a
-    no-duckdb run over a record WITHOUT a duckdb map, keep ownership
-    of the canonical path. The target is resolved once per run so the
-    incremental per-group flush obeys the same rule."""
-    import bench
-
-    real = bench.Path(bench.__file__).resolve().parent / "BENCH_DETAIL.json"
-    committed = json.loads(real.read_text())
-    assert committed.get("duckdb_queries"), (
-        "committed table of record must carry its DuckDB baseline map"
-    )
-    # against the committed record: a no-duckdb run is redirected,
-    # a --duckdb run owns the canonical path
-    assert bench._detail_target(False).name == "BENCH_DETAIL_driver.json"
-    assert bench._detail_target(True).name == "BENCH_DETAIL.json"
-
-    # against a record with no duckdb map, both run kinds own the path
-    fake = tmp_path / "BENCH_DETAIL.json"
-    fake.write_text(json.dumps({"queries": {"a": 1.0}}) + "\n")
-    monkeypatch.setattr(bench, "__file__", str(tmp_path / "bench.py"))
-    assert bench._detail_target(False).name == "BENCH_DETAIL.json"
-    assert bench._detail_target(True).name == "BENCH_DETAIL.json"
-    # and with no existing file at all
-    fake.unlink()
-    assert bench._detail_target(False).name == "BENCH_DETAIL.json"
-
-
-def test_group_spread_ratio_flags_dirty_attempt():
-    """r10: a non-streaming row whose in-JVM samples disagree by more
-    than SPREAD_CONTENTION_RATIO marks the attempt dirty even under
-    quiet floor probes (the s07 case — GC/worker pressure the
-    scheduler floor probe cannot see); a clean re-run's timings are
-    used. Streaming rows are exempt: their spread is trigger
-    scheduling jitter by design."""
-    import bench
-
-    quiet = {"load1": 1.0, "load5": 1.0, "floor_ms": 80.0}
-
-    # dirty first attempt (s07 spread 3.4x), clean second
-    snaps = iter([quiet, quiet, quiet, quiet])
-    runs = iter(
-        [
-            {"queries": {"s07": 5.0}, "spread": {"s07": [2.28, 7.77]}},
-            {"queries": {"s07": 1.9}, "spread": {"s07": [1.88, 2.2]}},
-        ]
-    )
-    t, s, meta = bench.measure_group(
-        "s", ["s07"], 3,
-        _run_once=lambda: next(runs), _snapshot=lambda: dict(next(snaps)),
-    )
-    assert t == {"s07": 1.9}
-    assert s == {"s07": [1.88, 2.2]}
-    assert meta["contended"] is False
-    assert len(meta["attempts"]) == 2
-    assert meta["attempts"][0]["worst_spread_ratio"] == 3.41
-
-    # the same spread on a STREAMING row is accepted without a re-run
-    snaps = iter([quiet, quiet])
-    runs = iter(
-        [{"queries": {"st19": 15.0}, "spread": {"st19": [11.37, 29.94]}}]
-    )
-    t, _, meta = bench.measure_group(
-        "stm", ["st19"], 3,
-        _run_once=lambda: next(runs), _snapshot=lambda: dict(next(snaps)),
-    )
-    assert t == {"st19": 15.0}
-    assert meta["contended"] is False
-    assert len(meta["attempts"]) == 1
-
-    # persistently-dirty row: retries exhaust, per-row minimum with
-    # the MATCHING attempt's spread, contended flag set
-    snaps = iter([quiet] * 2 * bench.GROUP_MAX_ATTEMPTS)
-    runs = iter(
-        [
-            {"queries": {"s07": 5.0}, "spread": {"s07": [2.3, 7.8]}},
-            {"queries": {"s07": 4.1}, "spread": {"s07": [1.9, 6.5]}},
-            {"queries": {"s07": 4.8}, "spread": {"s07": [2.0, 7.0]}},
-        ]
-    )
-    t, s, meta = bench.measure_group(
-        "s", ["s07"], 3,
-        _run_once=lambda: next(runs), _snapshot=lambda: dict(next(snaps)),
-    )
-    assert t == {"s07": 4.1}
-    assert s == {"s07": [1.9, 6.5]}
-    assert meta["contended"] is True

@@ -122,28 +122,38 @@ def test_s22_generation_dirs_safe_on_repeated_invocation(spark):
     assert not stray, f"s22 re-invocation left stray /tmp entries: {sorted(stray)}"
 
 
-def test_bench_child_jvm_leaves_tmp_clean(tmp_path, monkeypatch):
-    """VERDICT r8 #7 (bench path): a bench --queries child is its OWN
-    process with its OWN scratch root + atexit hook — after it exits,
-    nothing of its scratch footprint may survive. The child runs with
-    a PRIVATE TMPDIR so the check is immune to concurrent fsmr
-    processes on the box (a shared-/tmp snapshot diff races against
-    any parallel probe/bench run)."""
+def test_child_jvm_leaves_tmp_clean(tmp_path):
+    """A separate driver process has its OWN scratch root + atexit
+    hook — after it exits, nothing of its scratch footprint may
+    survive. The child runs with a PRIVATE TMPDIR so the check is
+    immune to concurrent fsmr processes on the box (a shared-/tmp
+    snapshot diff races against any parallel probe run)."""
+    import subprocess
     import sys
-
-    sys.path.insert(0, os.path.dirname(os.path.dirname(__file__)))
-    import bench
 
     private_tmp = tmp_path / "child_tmp"
     private_tmp.mkdir()
-    monkeypatch.setenv("TMPDIR", str(private_tmp))
-    # q02 is the cheapest scratch-free headline query; the child still
-    # initializes the full session + scratch machinery
-    out = bench._run_child(["--queries", "q02_filter_project"], 1)
-    assert bench._last_json_obj(out)["queries"]
+    # q02 is the cheapest query; shipping the package zip gives the
+    # child at least one exit-registered tmp entry to clean up
+    child = (
+        "from fsharp_mapreduce_spark.registry import QUERIES, load_all_query_modules\n"
+        "from fsharp_mapreduce_spark.session import ensure_package_shipped, get_spark\n"
+        "load_all_query_modules()\n"
+        "spark = get_spark()\n"
+        "ensure_package_shipped(spark)\n"
+        f"rows = QUERIES['q02_filter_project'].fn(spark, {SF_SMOKE!r}).collect()\n"
+        "assert rows\n"
+    )
+    subprocess.run(
+        [sys.executable, "-c", child],
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        env={**os.environ, "TMPDIR": str(private_tmp)},
+        check=True,
+        timeout=600,
+    )
     leftovers = [
         e
         for e in os.listdir(private_tmp)
         if e.startswith("fsmr") and not e.startswith(_PERSISTENT_OK_PREFIXES)
     ]
-    assert not leftovers, f"bench child JVM left tmp entries: {leftovers}"
+    assert not leftovers, f"child JVM left tmp entries: {leftovers}"

@@ -346,3 +346,36 @@ def test_q70_log_spaced_group_exact_and_nonconvergence(spark, monkeypatch):
     monkeypatch.setattr(relational, "Q69_EXACT_FALLBACK_ROWS", 8)
     with pytest.raises(RuntimeError, match="no convergence"):
         relational.grouped_exact_percentile(df, "g", "x", p=0.5)
+
+
+def test_q70_candidate_plan_size_bounded_across_rounds(spark, monkeypatch):
+    """Each bisection round rebuilds its candidate set from the previous
+    round's. That chain must not carry its lineage along: the analyzed
+    plan of the candidate set after the LAST round of the nonconvergence
+    input (the full pass budget) may exceed the one after round 2 only
+    by a constant, not by the rounds in between. Catalyst's size
+    estimate for it must not compound either (a checkpoint inherits
+    it; an inner-join chain multiplies it every round)."""
+    from fsharp_mapreduce_spark.operators import relational
+
+    sizes, estimate_digits = [], []
+    round_candidates = relational._round_candidates
+
+    def spy(prev_cand, bounds):
+        cand = round_candidates(prev_cand, bounds)
+        qe = cand._jdf.queryExecution()
+        sizes.append(len(qe.analyzed().toString()))
+        estimate_digits.append(len(str(qe.optimizedPlan().stats().sizeInBytes())))
+        return cand
+
+    monkeypatch.setattr(relational, "_round_candidates", spy)
+    monkeypatch.setattr(relational, "Q69_EXACT_FALLBACK_ROWS", 8)
+    vals = [2.0**e for e in range(-300, 301)]
+    rows = [("log", v) for v in vals] + [("easy", float(i)) for i in range(10)]
+    df = spark.createDataFrame(rows, "g string, x double")
+    with pytest.raises(RuntimeError, match="no convergence"):
+        relational.grouped_exact_percentile(df, "g", "x", p=0.5)
+    assert len(sizes) > relational.Q69_MAX_PASSES
+    # slack for expression ids gaining digits, never a round's subtree
+    assert sizes[-1] - sizes[1] <= 64, sizes
+    assert estimate_digits[-1] <= estimate_digits[1] + 2, estimate_digits
