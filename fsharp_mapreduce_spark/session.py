@@ -9,6 +9,7 @@ under the same execution regime it would see at 100 TB.
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 from pyspark.sql import SparkSession
 
@@ -19,6 +20,8 @@ from pyspark.sql import SparkSession
 # identical queries). Cluster deployments size executor heaps
 # per-container anyway.
 DRIVER_MEMORY_CAP_GIB = 20
+
+_EXECUTOR_PYTHONPATH = "spark.executorEnv.PYTHONPATH"
 
 
 def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
@@ -32,6 +35,24 @@ def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
     except (OSError, StopIteration):
         return f"{DRIVER_MEMORY_CAP_GIB}g"
     return f"{max(1, min(DRIVER_MEMORY_CAP_GIB, kib // (2 << 20)))}g"
+
+
+def worker_conf(master: str, extra_conf: dict[str, str] | None) -> dict[str, str]:
+    """``extra_conf``, plus starting Python workers from worker_daemon
+    when the master is local. That daemon stops every task from
+    re-reading pyspark.zip and the spark-core jar (see its docstring).
+    Only a local master's workers run where this package's parent
+    directory exists, so only then can they import the daemon from it.
+    A PYTHONPATH in ``extra_conf`` is kept, after that directory."""
+    conf = {}
+    if master.startswith("local"):
+        conf["spark.python.daemon.module"] = "fsharp_mapreduce_spark.worker_daemon"
+        conf[_EXECUTOR_PYTHONPATH] = str(Path(__file__).resolve().parent.parent)
+    for k, v in (extra_conf or {}).items():
+        if k == _EXECUTOR_PYTHONPATH and k in conf:
+            v = os.pathsep.join((conf[k], v))
+        conf[k] = v
+    return conf
 
 
 def get_spark(
@@ -91,7 +112,7 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/fsmr_warehouse"),
         )
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in worker_conf(master, extra_conf).items():
         builder = builder.config(k, v)
 
     spark = builder.getOrCreate()
@@ -112,7 +133,6 @@ def ensure_package_shipped(spark: SparkSession) -> None:
     (Common.fs:14, pickled fns at Example-Job.fs:72-75)."""
     import tempfile
     import zipfile
-    from pathlib import Path
 
     appid = spark.sparkContext.applicationId
     if appid in _shipped_apps:

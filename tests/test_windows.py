@@ -231,6 +231,37 @@ def test_q69_nonconvergence_raises_not_silent(spark, monkeypatch):
         relational.exact_percentile_scalable(df, "x", percentiles=(0.5,))
 
 
+def test_q69_candidate_plan_size_bounded_across_rounds(spark, monkeypatch):
+    """Each bisection pass narrows the candidates to one bucket of the
+    previous pass's. The analyzed plan of the candidate set after the
+    LAST pass of the nonconvergence input (the full pass budget) may
+    exceed the one after pass 2 only by a constant, and Catalyst's size
+    estimate for it must stay flat (the q70 checks below, for the
+    global loop)."""
+    from fsharp_mapreduce_spark.operators import relational
+
+    sizes, estimate_digits = [], []
+    range_candidates = relational._range_candidates
+
+    def spy(*args):
+        cand = range_candidates(*args)
+        qe = cand._jdf.queryExecution()
+        sizes.append(len(qe.analyzed().toString()))
+        estimate_digits.append(len(str(qe.optimizedPlan().stats().sizeInBytes())))
+        return cand
+
+    monkeypatch.setattr(relational, "_range_candidates", spy)
+    monkeypatch.setattr(relational, "Q69_EXACT_FALLBACK_ROWS", 8)
+    vals = [2.0**e for e in range(-500, 501)]
+    df = spark.createDataFrame([(v,) for v in vals], "x double")
+    with pytest.raises(RuntimeError, match="no convergence"):
+        relational.exact_percentile_scalable(df, "x", percentiles=(0.5,))
+    assert len(sizes) == relational.Q69_MAX_PASSES
+    # slack for expression ids gaining digits, never a pass's predicate
+    assert sizes[-1] - sizes[1] <= 64, sizes
+    assert estimate_digits[-1] <= estimate_digits[1] + 2, estimate_digits
+
+
 def test_q69_subnormal_width_range_underflow_guard(spark):
     """A range whose width/buckets underflows to 0.0 would make the
     linear bucket expression divide by zero (NaN buckets -> null group
