@@ -38,16 +38,31 @@ def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
 
 
 def worker_conf(master: str, extra_conf: dict[str, str] | None) -> dict[str, str]:
-    """``extra_conf``, plus starting Python workers from worker_daemon
-    when the master is local. That daemon stops every task from
-    re-reading pyspark.zip and the spark-core jar (see its docstring).
-    Only a local master's workers run where this package's parent
-    directory exists, so only then can they import the daemon from it.
-    A PYTHONPATH in ``extra_conf`` is kept, after that directory."""
+    """``extra_conf``, plus two settings that only hold when the master
+    is local, where workers and checkpoints share this host:
+
+    - Python workers start from worker_daemon, which stops every task
+      from re-reading pyspark.zip and the spark-core jar (see its
+      docstring). Only a local master's workers run where this
+      package's parent directory exists, so only then can they import
+      the daemon from it. A PYTHONPATH in ``extra_conf`` is kept,
+      after that directory.
+    - Stream checkpoints are written through Hadoop's FileSystem API
+      instead of FileContext. FileContext's overwriting rename asks
+      the local file system whether source and destination are
+      symlinks, and without libhadoop each ask forks ``readlink``:
+      248 processes over a 4-trigger stream. The FileSystem-based manager
+      does the same check-then-rename as local FileContext (an
+      ``exists``, then ``File.renameTo``) and forks nothing. Other
+      masters keep Spark's default, which suits every file system."""
     conf = {}
     if master.startswith("local"):
         conf["spark.python.daemon.module"] = "fsharp_mapreduce_spark.worker_daemon"
         conf[_EXECUTOR_PYTHONPATH] = str(Path(__file__).resolve().parent.parent)
+        conf["spark.sql.streaming.checkpointFileManagerClass"] = (
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager"
+        )
     for k, v in (extra_conf or {}).items():
         if k == _EXECUTOR_PYTHONPATH and k in conf:
             v = os.pathsep.join((conf[k], v))

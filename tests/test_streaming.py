@@ -872,3 +872,102 @@ def test_st23_stream_profile_audit_equals_batch(spark):
     assert sum(r.n_null_text for r in rows) > 0, rows
     assert all(r.n_null_text < r.n_docs for r in rows), rows
     assert all(r.min_chars <= r.max_chars for r in rows), rows
+
+
+def _st01_shape(stream):
+    return stream.withWatermark("ts", "1 hour").groupBy(
+        F.window("ts", "1 hour").getField("start").alias("bucket"), "event_type"
+    ).agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 4).alias("total_value"))
+
+
+def test_stream_answer_is_partition_count_invariant(spark):
+    """The fixture default runs state in one partition; the same stream
+    over several state partitions (keyed exchange, one state store per
+    partition) must land on the same batch answer."""
+    from fsharp_mapreduce_spark.streaming.loader import (
+        read_pull_stream,
+        run_to_completion,
+    )
+
+    ev = table(spark, SF_SMOKE, "events")
+    staged = stage_as_chunked_files(ev, n_chunks=4, memo_key=(SF_SMOKE, "events"))
+    want = rows_as_set(_st01_shape(ev))
+    for parts in (1, 4):
+        out = run_to_completion(
+            _st01_shape(read_pull_stream(spark, staged)),
+            f"st01_parts_{parts}",
+            shuffle_partitions=parts,
+        )
+        assert rows_as_set(out) == want, parts
+
+
+def test_stream_checkpoints_fork_no_readlink(spark, tmp_path):
+    """Spark's default FileContext checkpoint manager asks the local
+    file system whether each renamed file is a symlink, and without
+    libhadoop every ask forks `readlink` (248 over this 4-trigger
+    stream). A local get_spark session checkpoints through the
+    FileSystem-based manager, which forks none. Process starts are
+    read from a JFR recording of the session's JVM."""
+    from fsharp_mapreduce_spark import session
+    from fsharp_mapreduce_spark.streaming.loader import (
+        read_pull_stream,
+        run_to_completion,
+    )
+
+    manager = "spark.sql.streaming.checkpointFileManagerClass"
+    assert session.worker_conf("local[2]", None)[manager].endswith(
+        ".FileSystemBasedCheckpointFileManager"
+    )
+    assert manager not in session.worker_conf("spark://h:7077", None)
+
+    ev = table(spark, SF_SMOKE, "events")
+    staged = stage_as_chunked_files(ev, n_chunks=4, memo_key=(SF_SMOKE, "events"))
+    jvm = spark._jvm
+    recording = jvm.jdk.jfr.Recording()
+    recording.enable("jdk.ProcessStart")
+    recording.start()
+    try:
+        run_to_completion(_st01_shape(read_pull_stream(spark, staged)), "st01_forks")
+        # a known fork, so an empty recording cannot pass
+        jvm.java.lang.Runtime.getRuntime().exec("true").waitFor()
+    finally:
+        recording.stop()
+    dump = jvm.java.io.File(str(tmp_path / "forks.jfr")).toPath()
+    recording.dump(dump)
+    recording.close()
+    programs = [
+        str(e.getString("command")).split()[0].rsplit("/", 1)[-1]
+        for e in jvm.jdk.jfr.consumer.RecordingFile.readAllEvents(dump)
+    ]
+    assert "true" in programs
+    assert programs.count("readlink") == 0, programs.count("readlink")
+
+
+def test_pull_stream_schema_is_inferred_once_per_staging(spark):
+    """A second read_pull_stream over the same staged directory starts
+    no Spark job (its schema is memoised); restaging the directory with
+    another schema is seen by the next read."""
+    from fsharp_mapreduce_spark.scratch import scratch_dir
+    from fsharp_mapreduce_spark.streaming.loader import read_pull_stream
+
+    sc = spark.sparkContext
+    out_dir = scratch_dir("fsmr_schema_memo_")
+
+    def read(group: str):
+        """Jobs the read started, and the columns it sees."""
+        sc.setJobGroup(group, group)
+        try:
+            columns = read_pull_stream(spark, out_dir).schema.fieldNames()
+        finally:
+            for prop in ("spark.jobGroup.id", "spark.job.description",
+                         "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(prop, None)
+        return len(sc.statusTracker().getJobIdsForGroup(group)), columns
+
+    ev = table(spark, SF_SMOKE, "events")
+    stage_as_chunked_files(ev.select("event_id", "ts"), n_chunks=2, out_dir=out_dir)
+    assert read("schema-memo-first") == (1, ["event_id", "ts"])
+    assert read("schema-memo-second") == (0, ["event_id", "ts"])
+
+    stage_as_chunked_files(ev.select("event_id", "value"), n_chunks=2, out_dir=out_dir)
+    assert read("schema-memo-restaged") == (1, ["event_id", "value"])
